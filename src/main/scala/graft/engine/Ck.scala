@@ -103,6 +103,16 @@ object Ck {
 
   private val dirLock = new Object
 
+  /** Frees the blocks of a frame [[cp]] returned. A no-op in reliable mode
+    * (the files are the durability contract). Only a frame whose whole
+    * plan is one RDD scan is touched, so under the explain bypass (which
+    * hands back the lazy plan) nothing is freed.
+    */
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
   /** Chained-call sugar so a swap from `.localCheckpoint(e)` is one token:
     * `df.ckpt(e)`. Import `graft.engine.Ck.Ops`.
     */

@@ -34,8 +34,11 @@ object BootstrapPoisson {
 
   final case class Buf(nb: Array[Long], sb: Array[Long], n: Long, sx: Long)
 
-  final case class CI(mean_full_micro: Long, ci_lo_micro: Long,
-                      ci_hi_micro: Long)
+  /** Null where undefined: every field on empty input, a rank past the
+    * resamples that drew any row.
+    */
+  final case class CI(mean_full_micro: Option[Long], ci_lo_micro: Option[Long],
+                      ci_hi_micro: Option[Long])
 
   /** round(x, 0).cast(LongType) exactly as Spark evaluates it on a
     * DoubleType child: scala BigDecimal(double) (= java
@@ -97,15 +100,17 @@ object BootstrapPoisson {
 
       override def finish(r: Buf): CI = {
         // per-resample mean_micro, ranked by (mean_micro, b) exactly as
-        // the former row_number window ordered by (mean_micro, b)
-        val means = Array.tabulate(Resamples) { b =>
-          (roundToLong(r.sb(b).toDouble / r.nb(b).toDouble * 1e4), b)
-        }
-        java.util.Arrays.sort(means, Ordering.Tuple2[Long, Int])
-        CI(
-          roundToLong(r.sx.toDouble / r.n.toDouble * 1e4),
-          means(1)._1,   // rk = 2
-          means(48)._1)  // rk = 49
+        // the former row_number window ordered by (mean_micro, b). A
+        // resample that drew no row (nb = 0) has no mean: it is null and
+        // ranks after every defined mean, as the oracle's SQL division
+        // by zero and its NULLS LAST order give
+        val means = (0 until Resamples).collect {
+          case b if r.nb(b) != 0L =>
+            (roundToLong(r.sb(b).toDouble / r.nb(b).toDouble * 1e4), b)
+        }.sorted.map(_._1)
+        CI(Option.when(r.n != 0L)(roundToLong(r.sx.toDouble / r.n.toDouble * 1e4)),
+          means.lift(1),   // rk = 2
+          means.lift(48))  // rk = 49
       }
 
       override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]

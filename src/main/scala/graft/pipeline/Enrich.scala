@@ -44,7 +44,7 @@ object Enrich {
     * ties resolved deterministically by canonical ordering.
     * Built ONCE per enrich() call and shared across all 7 normalize
     * joins — the projections stay canonically identical so the broadcast
-    * materializes a single time (AQE exchange reuse).
+    * materializes a single time (ReuseExchange).
     *
     * keep-first on a (key, value) pair IS min-by-key — an associative
     * aggregate with map-side partial agg, not a ranking window (same
@@ -81,29 +81,32 @@ object Enrich {
     "ref_pen_rate" -> lit(D.refPenRate), "crowd_index" -> lit(D.crowdIndex),
     "home_travel_km" -> lit(D.travelKmHome), "away_travel_km" -> lit(D.travelKmAway))
 
+  /** The precedence existing ▸ joined ▸ default for fact column `base`
+    * (`has`: the fact carries it), guarded by the dim's row count `n`.
+    * Reference parity on the EMPTY-dim branch (enrich_features.py uses
+    * ensure_cols there): an empty dim must leave a PRE-EXISTING fact
+    * column untouched — including its nulls — while an ABSENT column
+    * still gets the default. Emptiness rides a broadcast 1-row count (no
+    * dim.isEmpty driver job): with a non-empty dim the guard is false and
+    * the precedence chain resolves as usual.
+    */
+  private def resolve(has: Boolean, base: String, joined: Column, n: Column,
+                      default: Column): Column =
+    if (has) when(n === 0, col(base)).otherwise(Ops.precedence(col(base), joined, default))
+    else Ops.precedence(lit(null).cast(DoubleType), joined, default)
+
   /** One precedence-join stage: left-join `dim` (payload pre-aliased to
-    * fresh `__j_<col>` names), then for each (base, default) resolve
-    * existing ▸ joined ▸ default and drop the helper.
+    * fresh `__j_<col>` names), then [[resolve]] each (base, default) and
+    * drop the helper.
     */
   private def precedenceJoin(fact: DataFrame, dim: DataFrame, joinCond: Column,
                              payload: Seq[(String, Double)]): DataFrame = {
-    // Reference parity on the EMPTY-dim branch (enrich_features.py uses
-    // ensure_cols there): an empty dim must leave a PRE-EXISTING fact
-    // column untouched — including its nulls — while an ABSENT column
-    // still gets the default. Emptiness rides a broadcast 1-row count
-    // (no dim.isEmpty driver job): with a non-empty dim the guard is
-    // false and the precedence chain resolves exactly as before.
     val dimN = dim.agg(count(lit(1)).as("__dim_n"))
     val joined = fact.join(broadcast(dim), joinCond, "left")
       .crossJoin(broadcast(dimN))
     payload.foldLeft(joined) { case (acc, (base, default)) =>
-      val resolved = if (fact.columns.contains(base))
-        when(col("__dim_n") === 0, col(base))
-          .otherwise(Ops.precedence(col(base), col(s"__j_$base"), lit(default)))
-      else
-        Ops.precedence(lit(null).cast(DoubleType), col(s"__j_$base"),
-          lit(default))
-      acc.withColumn(base, resolved).drop(s"__j_$base")
+      acc.withColumn(base, resolve(fact.columns.contains(base), base,
+        col(s"__j_$base"), col("__dim_n"), lit(default))).drop(s"__j_$base")
     }.drop("__dim_n")
   }
 
@@ -123,20 +126,10 @@ object Enrich {
           s"${side}_setpiece_rating" -> D.setpieceRating))
         .drop(s"__k_$side")
     }
-    // crowd_index: pre-existing ▸ home-side dim value ▸ 0.7; on an EMPTY
-    // teams dim a pre-existing column stays untouched (reference
-    // ensure_cols parity — same broadcast-count guard as precedenceJoin)
-    val crowdExisting = if (df.columns.contains("crowd_index"))
-      col("crowd_index") else lit(null).cast(DoubleType)
-    val resolvedCrowd = if (df.columns.contains("crowd_index"))
-      when(col("__tm_n") === 0, crowdExisting)
-        .otherwise(Ops.precedence(crowdExisting, col("__j_home_crowd_index"),
-          lit(D.crowdIndex)))
-    else
-      Ops.precedence(crowdExisting, col("__j_home_crowd_index"),
-        lit(D.crowdIndex))
+    // crowd_index: pre-existing ▸ home-side dim value ▸ 0.7
     out.crossJoin(broadcast(teams.agg(count(lit(1)).as("__tm_n"))))
-      .withColumn("crowd_index", resolvedCrowd)
+      .withColumn("crowd_index", resolve(df.columns.contains("crowd_index"),
+        "crowd_index", col("__j_home_crowd_index"), col("__tm_n"), lit(D.crowdIndex)))
       .drop("__j_home_crowd_index", "__j_away_crowd_index", "__tm_n")
   }
 
@@ -156,7 +149,6 @@ object Enrich {
     */
   def applyLineupFlags(df: DataFrame, lu: DataFrame): DataFrame = {
     val flags = Seq("key_att_out", "key_def_out", "keeper_changed")
-    val allFlags = for (s <- Seq("home", "away"); f <- flags) yield s"${s}_$f"
     Seq("home", "away").foldLeft(df) { (acc, side) =>
       val dim = lu.select(
         col("date").as(s"__d_$side") +: col("team").as(s"__k_$side") +:
@@ -167,16 +159,9 @@ object Enrich {
         .crossJoin(broadcast(lu.agg(count(lit(1)).as("__lu_n"))))
       flags.foldLeft(j) { (a, f) =>
         val base = s"${side}_$f"
-        // empty-dim parity (reference ensure_cols): a pre-existing flag
-        // column survives untouched when the lineup dim is empty
-        val resolved = if (df.columns.contains(base))
-          when(col("__lu_n") === 0, col(base).cast(IntegerType))
-            .otherwise(coalesce(col(base), col(s"__j_$base"), lit(0))
-              .cast(IntegerType))
-        else
-          coalesce(lit(null).cast(IntegerType), col(s"__j_$base"), lit(0))
-            .cast(IntegerType)
-        a.withColumn(base, resolved).drop(s"__j_$base")
+        a.withColumn(base, resolve(df.columns.contains(base), base,
+          col(s"__j_$base"), col("__lu_n"), lit(0)).cast(IntegerType))
+          .drop(s"__j_$base")
       }.drop(s"__d_$side", s"__k_$side", "__lu_n")
     }
   }
@@ -247,8 +232,10 @@ object Enrich {
     * the four emptiness guards ride a single union-count row instead of
     * 8 per-stage count-agg broadcasts, and each dim's home/away payload
     * projections are kept canonically identical so ReuseExchange builds
-    * every dim broadcast once. At 100 TB the fact side still streams
-    * through zero shuffles — one embarrassingly-parallel pass.
+    * every dim broadcast once. All 16 column resolutions land in the one
+    * final projection, which also drops every join key and payload. At
+    * 100 TB the fact side still streams through zero shuffles — one
+    * embarrassingly-parallel pass.
     */
   def enrich(fact: DataFrame, teams: DataFrame, stad: DataFrame, refs: DataFrame,
              inj: DataFrame, lu: DataFrame, xg: DataFrame, nameMap: DataFrame): DataFrame = {
@@ -277,8 +264,9 @@ object Enrich {
         count(when(col("__d") === "r", 1)).as("__n_refs"))
 
     // Per-side payload projections over each dim: the home and away
-    // selects are canonically identical, so every dim's broadcast
-    // materializes ONCE and the second side rides AQE exchange reuse.
+    // selects are canonically identical, so the physical ReuseExchange
+    // rule builds every dim's broadcast ONCE for both sides (with or
+    // without AQE).
     def teamsSel(side: String) = teamsN.select(col("team").as(s"__k_$side"),
       col("gk_rating").as(s"__j_${side}_gk_rating"),
       col("setpiece_rating").as(s"__j_${side}_setpiece_rating"),
@@ -299,91 +287,63 @@ object Enrich {
       col("xgd_hybrid").as(s"${side}_xgd"),
       col("xgd90_hybrid").as(s"${side}_xgd_per90"))
 
+    // the helper key and payload columns are never dropped mid-lineage:
+    // the one final select below keeps only the output columns
     val sided = Seq("home", "away").foldLeft(
         ensured.crossJoin(broadcast(guards))) { (acc, side) =>
       acc.join(broadcast(teamsSel(side)),
           col(s"${side}_team") === col(s"__k_$side"), "left")
-        .drop(s"__k_$side")
         .join(broadcast(injSel(side)),
           col("date") === col(s"__di_$side") &&
             col(s"${side}_team") === col(s"__ki_$side"), "left")
-        .drop(s"__di_$side", s"__ki_$side")
         .join(broadcast(luSel(side)),
           col("date") === col(s"__dl_$side") &&
             col(s"${side}_team") === col(s"__kl_$side"), "left")
-        .drop(s"__dl_$side", s"__kl_$side")
         .join(broadcast(stadSel(side)),
           col(s"${side}_team") === col(s"__s_$side"), "left")
-        .drop(s"__s_$side")
         .join(broadcast(xgSel(side)),
           col(s"${side}_team") === col(s"__x_$side"), "left")
-        .drop(s"__x_$side")
     }
     val refJoined = if (has.contains("ref_name"))
       sided.join(broadcast(refs.select(col("ref_name").as("__k_ref"),
           col("ref_pen_rate").as("__j_ref_pen_rate"))),
-        col("ref_name") === col("__k_ref"), "left").drop("__k_ref")
+        col("ref_name") === col("__k_ref"), "left")
     else sided
 
     // column resolutions — expression-for-expression the staged chain,
-    // with the shared counts row standing in for the per-stage __dim_n
-    def guarded(base: String, guard: Column, default: Double): Column =
-      if (has.contains(base))
-        when(guard === 0, col(base))
-          .otherwise(Ops.precedence(col(base), col(s"__j_$base"), lit(default)))
-      else Ops.precedence(lit(null).cast(DoubleType), col(s"__j_$base"),
-        lit(default))
-
+    // with the shared counts row standing in for the per-stage guards.
+    // Each reads only its own pre-resolution column and joined payloads,
+    // so all 16 resolve side by side in one projection.
+    def res(base: String, n: String, default: Column): Column =
+      resolve(has.contains(base), base, col(s"__j_$base"), col(n), default)
+    val sides = Seq("home", "away")
     val flags = Seq("key_att_out", "key_def_out", "keeper_changed")
-    var out = refJoined
-    for (side <- Seq("home", "away"); (c, d) <- Seq(
+    val resolved: Map[String, Column] = ((for (side <- sides; (c, d) <- Seq(
         "gk_rating" -> D.gkRating, "setpiece_rating" -> D.setpieceRating))
-      out = out.withColumn(s"${side}_$c",
-        guarded(s"${side}_$c", col("__n_teams"), d))
-    out = out.withColumn("crowd_index", {
-      val existing = if (has.contains("crowd_index")) col("crowd_index")
-        else lit(null).cast(DoubleType)
-      if (has.contains("crowd_index"))
-        when(col("__n_teams") === 0, existing)
-          .otherwise(Ops.precedence(existing, col("__j_home_crowd_index"),
-            lit(D.crowdIndex)))
-      else Ops.precedence(existing, col("__j_home_crowd_index"),
-        lit(D.crowdIndex))
-    })
-    for (side <- Seq("home", "away"))
-      out = out.withColumn(s"${side}_injury_index",
-        guarded(s"${side}_injury_index", col("__n_inj"), D.injuryIndex))
-    for (side <- Seq("home", "away"); f <- flags) {
-      val base = s"${side}_$f"
-      val resolved = if (has.contains(base))
-        when(col("__n_lu") === 0, col(base).cast(IntegerType))
-          .otherwise(coalesce(col(base), col(s"__j_$base"), lit(0))
-            .cast(IntegerType))
-      else coalesce(lit(null).cast(IntegerType), col(s"__j_$base"), lit(0))
-        .cast(IntegerType)
-      out = out.withColumn(base, resolved)
-    }
-    out = if (has.contains("ref_name"))
-      out.withColumn("ref_pen_rate",
-        guarded("ref_pen_rate", col("__n_refs"), D.refPenRate))
-    else out.withColumn("ref_pen_rate",
-      coalesce(col("ref_pen_rate"), lit(D.refPenRate)))
-    out = out
-      .withColumn("home_travel_km",
-        coalesce(col("home_travel_km"), lit(D.travelKmHome)))
-      .withColumn("away_travel_km",
-        when(col("away_travel_km").isNotNull, col("away_travel_km"))
+      yield s"${side}_$c" -> res(s"${side}_$c", "__n_teams", lit(d))) ++
+      sides.map(side => s"${side}_injury_index" ->
+        res(s"${side}_injury_index", "__n_inj", lit(D.injuryIndex))) ++
+      (for (side <- sides; f <- flags)
+        yield s"${side}_$f" -> res(s"${side}_$f", "__n_lu", lit(0)).cast(IntegerType)) ++
+      Seq(
+        "crowd_index" -> resolve(has.contains("crowd_index"), "crowd_index",
+          col("__j_home_crowd_index"), col("__n_teams"), lit(D.crowdIndex)),
+        "ref_pen_rate" -> (if (has.contains("ref_name"))
+          res("ref_pen_rate", "__n_refs", lit(D.refPenRate))
+        else coalesce(col("ref_pen_rate"), lit(D.refPenRate))),
+        "home_travel_km" -> coalesce(col("home_travel_km"), lit(D.travelKmHome)),
+        "away_travel_km" -> when(col("away_travel_km").isNotNull, col("away_travel_km"))
           .otherwise(F.haversineKmOrDefault(col("home_lat"), col("home_lon"),
-            col("away_lat"), col("away_lon"), D.travelKmAway)))
+            col("away_lat"), col("away_lon"), D.travelKmAway)))).toMap
 
     // staged column order: the ensured frame first (in-place
     // replacements), then the flags the fact lacked, then the xg metrics
     val metrics = Seq("xg", "xga", "xgd", "xgd_per90")
-    val flagCols = for (s <- Seq("home", "away"); f <- flags) yield s"${s}_$f"
-    val xgCols = for (s <- Seq("home", "away"); m <- metrics) yield s"${s}_$m"
+    val flagCols = for (s <- sides; f <- flags) yield s"${s}_$f"
+    val xgCols = for (s <- sides; m <- metrics) yield s"${s}_$m"
     val order = ensured.columns.toSeq ++
       flagCols.filterNot(has.contains) ++ xgCols
-    out.select(order.map(col): _*)
+    refJoined.select(order.map(c => resolved.get(c).fold(col(c))(_.as(c))): _*)
   }
 
   /** P1 + A2 — final projection to the canonical column order and global

@@ -22,6 +22,16 @@ object Ingest {
   val oddsDraw: Seq[String] = Seq("B365D", "PSD", "WHD", "IWD")
   val oddsAway: Seq[String] = Seq("B365A", "PSA", "WHA", "IWA")
 
+  /** The F15 constant defaults every ingested row carries. */
+  private val constants: Seq[(String, Column)] = Seq(
+    "home_rest_days" -> lit(D.restDays), "away_rest_days" -> lit(D.restDays),
+    "home_travel_km" -> lit(200.0), "away_travel_km" -> lit(200.0),
+    "home_injury_index" -> lit(D.injuryIndex), "away_injury_index" -> lit(D.injuryIndex),
+    "home_gk_rating" -> lit(D.gkRating), "away_gk_rating" -> lit(D.gkRating),
+    "home_setpiece_rating" -> lit(D.setpieceRating),
+    "away_setpiece_rating" -> lit(D.setpieceRating),
+    "ref_pen_rate" -> lit(D.refPenRate), "crowd_index" -> lit(D.crowdIndex))
+
   /** P7 + P8 + P5 + F1 + F15 over one raw bookmaker CSV frame. */
   def normalize(raw: DataFrame): DataFrame = {
     val up = raw.toDF(raw.columns.map(_.toUpperCase).toIndexedSeq: _*)
@@ -42,18 +52,7 @@ object Ingest {
       .withColumn("date", F.parseDateDayFirst(col("date_raw")))
       .drop("date_raw")
       .na.drop(Seq("date"))
-      .withColumn("home_rest_days", lit(D.restDays))
-      .withColumn("away_rest_days", lit(D.restDays))
-      .withColumn("home_travel_km", lit(200.0))
-      .withColumn("away_travel_km", lit(200.0))
-      .withColumn("home_injury_index", lit(D.injuryIndex))
-      .withColumn("away_injury_index", lit(D.injuryIndex))
-      .withColumn("home_gk_rating", lit(D.gkRating))
-      .withColumn("away_gk_rating", lit(D.gkRating))
-      .withColumn("home_setpiece_rating", lit(D.setpieceRating))
-      .withColumn("away_setpiece_rating", lit(D.setpieceRating))
-      .withColumn("ref_pen_rate", lit(D.refPenRate))
-      .withColumn("crowd_index", lit(D.crowdIndex))
+      .select(col("*") +: constants.map { case (c, v) => v.as(c) }: _*)
   }
 
   /** A1 + A2 — union the per-league frames and globally sort by date. */

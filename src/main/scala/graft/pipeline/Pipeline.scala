@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Validate
+import graft.engine.{Ck, Validate}
 import graft.sources.{Sinks, Sources}
 
 /** The reference's end-to-end daily DAG (pipeline.yml:30-74) as ONE Spark
@@ -22,6 +22,17 @@ import graft.sources.{Sinks, Sources}
   * All network sources arrive through [[Sources.Fetcher]] so deployments
   * inject real HTTP and tests inject canned bodies; every fetch failure
   * degrades to an empty-but-valid frame (S6) and the DAG completes.
+  *
+  * Each canonical output executes ONCE per [[run]]: `hist` and `upcoming`
+  * are materialized inside `run` through [[Ck.cp]] (a local checkpoint, or
+  * a durable one under `spark.graft.reliableCheckpoint`), so the
+  * validation counts and every [[write]] read those rows instead of
+  * re-planning and re-running the enrichment. The xG blend and the team
+  * priors both enrichments join are materialized once too, and freed
+  * before `run` returns (the output checkpoints have truncated their
+  * lineage). The caller owns the two output checkpoints' blocks and frees
+  * them with [[Outputs.release]]; `teamsMaster` and `xgHybrid` are
+  * returned as lazy frames that hold no blocks.
   */
 object Pipeline {
 
@@ -39,7 +50,12 @@ object Pipeline {
 
   final case class Outputs(hist: DataFrame, upcoming: DataFrame,
                            teamsMaster: DataFrame, xgHybrid: DataFrame,
-                           reports: Seq[Validate.ContractReport])
+                           reports: Seq[Validate.ContractReport]) {
+    /** Frees the materialized `hist` and `upcoming` rows; neither frame
+      * may be read afterwards.
+      */
+    def release(): Unit = { Ck.free(hist); Ck.free(upcoming) }
+  }
 
   def run(spark: SparkSession, in: Inputs): Outputs = {
     // 1. historical ingest (entry point 1)
@@ -54,20 +70,27 @@ object Pipeline {
       in.oddsJsonBody.map(OddsJson.parseGames(spark, _))
         .getOrElse(Sources.emptyWithSchema(spark, Schemas.upcoming)))
 
-    // 3. xG hybrid + team priors (entry point 3)
+    // 3. xG hybrid + team priors (entry point 3), materialized once for
+    // both enrichments
     val xg = (in.xgCurrent, in.xgLast) match {
       case (Some(c), Some(l)) => XgHybrid.blend(c, l)
       case _ => Sources.emptyWithSchema(spark, Schemas.xgHybrid)
     }
-    val priors = if (xg.isEmpty) in.dims.teams else XgHybrid.teamPriors(xg)
+    val xgRows = Ck.cp(xg, eager = true)
+    val xgEmpty = xgRows.isEmpty
+    val priors = if (xgEmpty) in.dims.teams else XgHybrid.teamPriors(xg)
+    val priorRows = if (xgEmpty) priors else Ck.cp(XgHybrid.teamPriors(xgRows), eager = true)
 
-    // 4. enrichment (entry point 2) over both fact tables
-    def enrich(df: DataFrame): DataFrame =
-      Enrich.enrich(df, priors, in.dims.stadiums, in.dims.refs,
-        in.dims.injuries, in.dims.lineups, xg, in.dims.nameMap)
+    // 4. enrichment (entry point 2) over both fact tables, each output
+    // executed once
+    def enrich(df: DataFrame, columns: Seq[String]): DataFrame =
+      Ck.cp(Enrich.buildFinal(Enrich.enrich(df, priorRows, in.dims.stadiums,
+        in.dims.refs, in.dims.injuries, in.dims.lineups, xgRows,
+        in.dims.nameMap), columns), eager = true)
 
-    val hist = Enrich.buildFinal(enrich(hist0), Schemas.histColumns)
-    val upcoming = Enrich.buildFinal(enrich(upcoming0), Schemas.upcomingColumns)
+    val (hist, upcoming) =
+      try (enrich(hist0, Schemas.histColumns), enrich(upcoming0, Schemas.upcomingColumns))
+      finally { Ck.free(xgRows); if (!xgEmpty) Ck.free(priorRows) }
 
     // 5. validation (the reference's de-facto spec)
     val reports = Seq(

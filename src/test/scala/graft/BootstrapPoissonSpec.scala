@@ -64,6 +64,18 @@ class BootstrapPoissonSpec extends SparkSpec {
     (row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
+  /** The kernel's statistics with nulls kept. */
+  private def kernelNullable(base: org.apache.spark.sql.DataFrame)
+      : (Option[Long], Option[Long], Option[Long]) = {
+    val ci = graft.operators.BootstrapPoisson.udafColumn
+    val row = base.agg(ci(col("okey"), col("x")).as("r"))
+      .select(col("r.mean_full_micro"), col("r.ci_lo_micro"),
+        col("r.ci_hi_micro"))
+      .head()
+    def get(i: Int) = if (row.isNullAt(i)) None else Some(row.getLong(i))
+    (get(0), get(1), get(2))
+  }
+
   private def frame(rows: Seq[(Long, Long)]) =
     rows.toDF("okey", "x").repartition(3) // force a multi-buffer merge
 
@@ -102,5 +114,20 @@ class BootstrapPoissonSpec extends SparkSpec {
     for (k <- keys; b <- 0 until 50)
       assert(graft.operators.BootstrapPoisson.weight(k, b) === ref((k, b)),
         s"weight mismatch at okey=$k b=$b")
+  }
+
+  test("empty input: every statistic is null, nothing throws") {
+    assert(kernelNullable(frame(Nil)) === ((None, None, None)))
+  }
+
+  test("a zero-weight resample has no mean and ranks after every mean") {
+    // one row: each resample that gives it Poisson weight 0 drew nothing,
+    // every other resample's mean is the row's own value
+    val (okey, x) = (1L, 12345L)
+    val drawn = (0 until 50)
+      .count(b => graft.operators.BootstrapPoisson.weight(okey, b) != 0L)
+    assert(drawn >= 2 && drawn < 49, s"$drawn resamples drew the row")
+    assert(kernelNullable(frame(Seq(okey -> x))) ===
+      ((Some(x * 10000), Some(x * 10000), None)))
   }
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Ops
 import graft.pipeline.{Enrich, Schemas}
 import graft.sources.Sources
 
@@ -147,5 +148,40 @@ class EnrichSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
     assert(!plan.contains("SortMergeJoin"), "dimension join fell back to SMJ")
+  }
+
+  /** The staged public chain [[Enrich.enrich]] fuses, one stage per call,
+    * over a fact whose date is already the timestamp enrich casts it to.
+    */
+  private def staged(fact: DataFrame, teams: DataFrame, stad: DataFrame,
+                     refs: DataFrame, inj: DataFrame, lu: DataFrame,
+                     xg: DataFrame, nameMap: DataFrame): DataFrame =
+    Seq[DataFrame => DataFrame](
+      Enrich.normalizeNames(_, nameMap, Seq("home_team", "away_team")),
+      Ops.ensureCols(_, Enrich.preDefaults),
+      Enrich.mergeTeamMaster(_, teams), Enrich.applyInjuries(_, inj),
+      Enrich.applyLineupFlags(_, lu), Enrich.applyRefRates(_, refs),
+      Enrich.computeTravel(_, stad), Enrich.mergeXgHybrid(_, xg))
+      .foldLeft(fact.withColumn("date", col("date").cast("timestamp")))((df, f) => f(df))
+
+  /** Same columns by name, same rows in sorted order. */
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    val cols = want.columns.sorted
+    assert(got.columns.sorted.toSeq == cols.toSeq)
+    def rows(df: DataFrame) = df.select(cols.toIndexedSeq.map(col): _*).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(rows(got) == rows(want))
+  }
+
+  test("fused enrich equals the staged chain on the fixture and the empty-dims matrix") {
+    val withRef = fact.withColumn("ref_name", when($"home_team" === "Liverpool", "The Ref"))
+    for (f <- Seq(fact, withRef))
+      assertSameRows(Enrich.enrich(f, teams, stad, refs, inj, lu, xg, nameMap),
+        staged(f, teams, stad, refs, inj, lu, xg, nameMap))
+    val dims = Seq(empty(Schemas.teamsMaster), empty(Schemas.stadiums),
+      empty(Schemas.refBaselines), empty(Schemas.injuries), empty(Schemas.lineups),
+      empty(Schemas.xgHybrid), empty(Schemas.teamNameMap))
+    val Seq(t, s, r, i, l, x, m) = dims
+    assertSameRows(Enrich.enrich(fact, t, s, r, i, l, x, m), staged(fact, t, s, r, i, l, x, m))
   }
 }

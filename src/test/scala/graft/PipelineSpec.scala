@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TestBus
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pipeline.{Pipeline, Schemas}
 import graft.sources.Sources
 
@@ -29,25 +35,27 @@ class PipelineSpec extends SparkSpec {
       .toDF("date", "team", "key_att_out", "key_def_out", "keeper_changed"),
     nameMap = Seq(("The Gunners", "Arsenal")).toDF("raw", "canonical"))
 
-  test("full DAG: ingest → odds → xg → priors → enrich → build → validate") {
-    val rawLeague = Seq(
-      ("17/08/2024", "The Gunners", "Chelsea", "2", "1", 1.8, 3.5, 4.2))
-      .toDF("Date", "HomeTeam", "AwayTeam", "FTHG", "FTAG", "B365H", "B365D", "B365A")
-    val oddsJson =
-      """[{"home_team":"Arsenal","away_team":"Chelsea",
-          "commence_time":"2024-08-24T16:30:00Z",
-          "bookmakers":[{"key":"bm","markets":[{"key":"h2h","outcomes":[
-            {"name":"Arsenal","price":1.9},{"name":"Draw","price":3.6},
-            {"name":"Chelsea","price":3.9}]}]}]}]"""
-    val xgCur = Seq(("Arsenal", 1, "2.1", "0.9", "1.2", "0.5"),
-      ("Chelsea", 1, "1.8", "1.1", "0.7", "0.2"))
-      .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
-    val xgLast = Seq(("Arsenal", 1, "1.9", "1.0", "0.9", "0.3"))
-      .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
+  private val rawLeague = Seq(
+    ("17/08/2024", "The Gunners", "Chelsea", "2", "1", 1.8, 3.5, 4.2))
+    .toDF("Date", "HomeTeam", "AwayTeam", "FTHG", "FTAG", "B365H", "B365D", "B365A")
+  private val oddsJson =
+    """[{"home_team":"Arsenal","away_team":"Chelsea",
+        "commence_time":"2024-08-24T16:30:00Z",
+        "bookmakers":[{"key":"bm","markets":[{"key":"h2h","outcomes":[
+          {"name":"Arsenal","price":1.9},{"name":"Draw","price":3.6},
+          {"name":"Chelsea","price":3.9}]}]}]}]"""
+  private val xgCur = Seq(("Arsenal", 1, "2.1", "0.9", "1.2", "0.5"),
+    ("Chelsea", 1, "1.8", "1.1", "0.7", "0.2"))
+    .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
+  private val xgLast = Seq(("Arsenal", 1, "1.9", "1.0", "0.9", "0.3"))
+    .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
 
-    val out = Pipeline.run(spark, Pipeline.Inputs(
-      Seq(rawLeague), Some(oddsJson), manualOdds = None,
-      Some(xgCur), Some(xgLast), dims))
+  private def fullInputs = Pipeline.Inputs(
+    Seq(rawLeague), Some(oddsJson), manualOdds = None,
+    Some(xgCur), Some(xgLast), dims)
+
+  test("full DAG: ingest → odds → xg → priors → enrich → build → validate") {
+    val out = Pipeline.run(spark, fullInputs)
 
     assert(out.reports.forall(_.ok), s"contract violations: ${out.reports}")
     val h = out.hist.collect()(0)
@@ -100,5 +108,42 @@ class PipelineSpec extends SparkSpec {
     val histLines = Files.readAllLines(Paths.get(s"$dir/HIST_matches.csv"))
     assert(histLines.get(0) == Schemas.histColumns.mkString(","))
     assert(histLines.size == 2)
+  }
+
+  test("each output executes once: run and both writes plan the enrichment twice") {
+    // every execution of an enriched fact carries its broadcast dim joins;
+    // run, the CSV write and the parquet write together must execute the
+    // two outputs once each, not once per consumer
+    val enriched = new AtomicInteger
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[BroadcastHashJoinExec]).isDefined)
+          enriched.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = Files.createTempDirectory("graft_pipe_once_").toString
+    spark.listenerManager.register(listener)
+    try {
+      val out = Pipeline.run(spark, fullInputs)
+      Pipeline.write(out, s"$dir/csv")
+      Pipeline.write(out, s"$dir/parquet", parquet = true)
+      out.release()
+      TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(enriched.get == 2)
+  }
+
+  test("release: a run leaves no persisted blocks once its outputs are released") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Pipeline.run(spark, fullInputs)
+    // the two materialized outputs hold blocks; the xG and priors
+    // materializations were freed inside run
+    assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    assert(out.hist.count() == 1 && out.upcoming.count() == 1)
+    out.release()
+    assert(sc.getPersistentRDDs.keySet == before)
+    // the lazy outputs hold no blocks and stay readable
+    assert(out.xgHybrid.count() == 2 && out.teamsMaster.count() == 2)
   }
 }
